@@ -1046,23 +1046,21 @@ object SparkEntry {
           col("t1r"), col("t1c"), round(col("w1"), 6).as("w1"),
           col("t2r"), col("t2c"), round(col("w2"), 6).as("w2"))),
 
-    // Dinf flow accumulation: fixed-order Jacobi over the weighted DAG
+    // Dinf flow accumulation: fixed-slot-order fold over the weighted DAG
     "geo_dinf_accum" -> ((s, dir) =>
-      operators.Terrain.dinfAccum(Derived.partGrid(s, dir), rounds = 24)
+      operators.Terrain.dinfAccum(Derived.partGrid(s, dir))
         .select(col("r"), col("c"), round(col("acc"), 6).as("acc"))),
 
     // FD8 multiple-flow-direction accumulation (FlowAccumFD8.java):
     // relief-proportional split among all lower neighbours
     "geo_fd8_accum" -> ((s, dir) =>
-      operators.Terrain.fd8Accum(Derived.partGrid(s, dir), power = 1.0,
-          rounds = 24)
+      operators.Terrain.fd8Accum(Derived.partGrid(s, dir), power = 1.0)
         .select(col("r"), col("c"), round(col("acc"), 6).as("acc"))),
 
     // MDInf multiple-direction accumulation (FlowAccumMDInf.java,
     // Seibert & McGlynn): facet-apportioned split over the 8 rays
     "geo_mdinf_accum" -> ((s, dir) =>
-      operators.Terrain.mdinfAccum(Derived.partGrid(s, dir),
-          hExp = 1.0, rounds = 24)
+      operators.Terrain.mdinfAccum(Derived.partGrid(s, dir), hExp = 1.0)
         .select(col("r"), col("c"), round(col("acc"), 6).as("acc"))),
 
     // MDInf apportioning itself (the FlowPointerDinf-analogue surface):
@@ -1079,8 +1077,7 @@ object SparkEntry {
     // accumulation derived from the same DEM's MDInf accumulation
     "geo_side_mdinf" -> ((s, dir) => {
       val g = Derived.partGrid(s, dir)
-      val accum = operators.Terrain.mdinfAccum(g, hExp = 1.0,
-        rounds = 24)
+      val accum = operators.Terrain.mdinfAccum(g, hExp = 1.0)
       val streams = accum.where(col("acc") > 5.0).select("r", "c")
       operators.Terrain.sideMdinf(g, accum, streams, caThr = 5.0)
     }),
@@ -1105,7 +1102,7 @@ object SparkEntry {
         .withColumn("eff",
           lit(0.8) + (col("r") % 3).cast("double") * lit(0.05))
         .withColumn("absorp", (col("c") % 4).cast("double") * lit(0.01))
-      operators.Terrain.massFluxD8(g, rounds = 24)
+      operators.Terrain.massFluxD8(g)
         .select(col("r"), col("c"), round(col("acc"), 6).as("acc"))
     }),
 
@@ -1117,7 +1114,7 @@ object SparkEntry {
         .withColumn("eff",
           lit(0.8) + (col("r") % 3).cast("double") * lit(0.05))
         .withColumn("absorp", (col("c") % 4).cast("double") * lit(0.01))
-      operators.Terrain.massFluxDinf(g, rounds = 24)
+      operators.Terrain.massFluxDinf(g)
         .select(col("r"), col("c"), round(col("acc"), 6).as("acc"))
     }),
 
@@ -7451,8 +7448,12 @@ object SparkEntry {
 
   /** Unrolled Dinf Jacobi accumulation (mirrors Terrain.dinfAccum):
     * incoming loads pivot into 8 fixed direction slots, summed in
-    * textual order; `iters` >= the longest weighted flowpath (measured
-    * 14 on this grid) makes the final round the exact fixpoint. */
+    * textual order. Terrain's fold is exact on any DAG; this oracle
+    * runs a fixed 24 rounds, so it matches only while 24 rounds cover
+    * the fixture: its longest paths are 13 steps under Dinf and 27
+    * under FD8/MDInf, and the terms past round 24 on those longer
+    * paths fall below the 6-decimal rounding of the compared
+    * outputs. A larger fixture needs more rounds here. */
   private def dinfAccumSqlCtes(iters: Int): String =
     accumSqlCtes(iters, "dedges", "da")
 

@@ -590,31 +590,15 @@ object Terrain {
     // so a small grid runs one-task Kahn topological accumulation
     // instead of the tiled packet rounds (identical output).
     if (cells.count() <= localFixpointMaxRows) {
-      return cells.coalesce(1).mapPartitions { it =>
-        val arr = it.toArray
-        val n = arr.length
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        arr.zipWithIndex.foreach { case (f, i) => idx((f.r, f.c)) = i }
-        val nxt = arr.map { f =>
-          if (f.sink) -1
-          else idx.getOrElse((f.tr, f.tc), -1)
-        }
-        val indeg = new Array[Int](n)
-        nxt.foreach(t => if (t >= 0) indeg(t) += 1)
-        val acc = Array.fill(n)(1L)
-        val stack = new scala.collection.mutable.ArrayDeque[Int]
-        for (i <- 0 until n) if (indeg(i) == 0) stack.append(i)
-        while (stack.nonEmpty) {
-          val i = stack.removeLast()
-          val t = nxt(i)
-          if (t >= 0) {
-            acc(t) += acc(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.append(t)
-          }
-        }
-        arr.indices.iterator.map(i => (arr(i).r, arr(i).c, acc(i)))
-      }.toDF("r", "c", "n_upslope")
+      val cs = cells.toDF()
+      return DagFold.successorFoldLocal("flowAccumD8",
+          cs.select(col("r"), col("c"), lit(1L).as("x")),
+          cs.where(!col("sink")).select(col("r"), col("c"), col("tr"),
+            col("tc"), lit(0L).as("d")), Seq("n_upslope")) { g =>
+        val acc = g.x.clone()
+        g.forEachEdge((i, t) => acc(t) += acc(i))
+        Seq(acc)
+      }
     }
 
     val T = tileSize.toLong
@@ -880,28 +864,21 @@ object Terrain {
 
   /**
    * Dinf flow accumulation: specific catchment = 1 + Σ(w_in · acc_up)
-   * over the weighted Dinf DAG.
-   *
-   * Executed as `rounds` synchronous Jacobi iterations with the
-   * incoming loads pivoted into the 8 fixed direction slots and added
-   * in textual order (d0 + … + d7) — every round is bit-exact against
-   * the identically-unrolled SQL oracle, and once the longest weighted
-   * path has propagated the iteration is EXACTLY stationary (the same
-   * doubles recompute), so any rounds >= longest-path-length yield the
-   * fixpoint. The whole loop is lazy (one job at the end); lineage is
-   * truncated every few rounds. At cluster scale each round is one
-   * shuffle of the cell relation — for deep flowpaths prefer the
-   * packet-tiled D8 scheme's generalisation; this form is chosen for
-   * its deterministic summation order.
+   * over the weighted Dinf DAG, via [[weightedAccum]]: exact on any
+   * DAG (each cell is summed once its sources are final), with the
+   * incoming loads in the 8 fixed direction slots added in textual
+   * order (d0 + … + d7) — bit-equal to the unrolled SQL oracle once
+   * that has run past the longest weighted flowpath.
    */
-  def dinfAccum(grid: DataFrame, rounds: Int = 24): DataFrame =
-    weightedAccum(dinfEdges(grid), grid, rounds)
+  def dinfAccum(grid: DataFrame): DataFrame =
+    weightedAccum(dinfEdges(grid), grid)
 
   /**
    * Size switch for the iterative fixpoints: below this many rows the
-   * Jacobi rounds / pointer chases run in ONE task over primitive
-   * arrays — identical arithmetic in identical order, so the result
-   * is bit-equal to the distributed rounds, without paying ~0.5 s of
+   * DAG folds ([[DagFold]]) and pointer chases run in ONE task over
+   * primitive arrays — the DAG folds in Kahn order, each cell computed
+   * once from final inputs, which is bit-equal to the distributed
+   * rounds run until stationary — without paying ~0.5 s of
    * job-scheduling overhead per round for a relation that fits in one
    * executor's memory. Above it, the distributed form runs (the
    * 100 TB path). This is the same runtime-statistics-driven strategy
@@ -910,88 +887,15 @@ object Terrain {
    */
   private[graft] var localFixpointMaxRows: Long = 4000000L
 
-  /** One-task replication of [[weightedAccum]]'s Jacobi rounds:
-    * per target cell the 8 direction slots add in ascending-j order
-    * onto 1.0, exactly the distributed fold (each (target, slot)
-    * receives at most one edge, so the per-slot "sum" is one term and
-    * no ordering freedom exists anywhere). */
-  private def weightedAccumLocal(edges: DataFrame, base: DataFrame,
-                                 rounds: Int): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val tagged = base
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        lit(0.0).as("w"), lit(-1).cast("int").as("j"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), col("w"), col("j").cast("int").as("j")))
-      .as[(Long, Long, Long, Long, Double, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._6 == -1).map(t => (t._1, t._2))
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-      val n = cells.length
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, w, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = w
-        case _ =>
-      }
-      var acc = Array.fill(n)(1.0)
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = 1.0
-          var j = 0
-          while (j < 8) {
-            if (inSrc(i)(j) >= 0) s += inW(i)(j) * acc(inSrc(i)(j))
-            else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i => (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
-
-  /** Shared weighted-DAG accumulation: `rounds` direction-slot Jacobi
-    * iterations over (r, c) -> (tr, tc, w, j) edges (see [[dinfAccum]]
-    * for the bit-exactness rationale). Used by Dinf and FD8.
-    * Size-adaptive: grids under [[localFixpointMaxRows]] run the
-    * identical rounds in one task ([[weightedAccumLocal]]). */
-  private[graft] def weightedAccum(edgesIn: DataFrame, grid: DataFrame,
-                                   rounds: Int): DataFrame = {
-    val edges = edgesIn.localCheckpoint(true)
-    val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows)
-      return weightedAccumLocal(edges, base, rounds)
-    var acc = base.withColumn("acc", lit(1.0))
-    for (i <- 1 to rounds) {
-      val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("acc").as("__a")),
-          Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(when(col("j") === 0, col("w") * col("__a"))).as("d0"),
-          (1 until 8).map(j =>
-            sum(when(col("j") === j, col("w") * col("__a"))).as(s"d$j")): _*)
-      acc = base.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          (0 until 8).foldLeft(lit(1.0)) { (s, j) =>
-            s + coalesce(col(s"d$j"), lit(0.0))
-          }.as("acc"))
-      // frequent lineage truncation: nested join+pivot rounds blow up
-      // the optimizer's constraint propagation (OOM past ~6 rounds)
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
-    }
-    acc
-  }
+  /** Shared weighted-DAG accumulation: acc = 1 + Σ_slots w·acc_src over
+    * (r, c) -> (tr, tc, w, j) edges, a [[DagFold.slotFold]]. Used by
+    * Dinf, FD8 and MDInf. */
+  private[graft] def weightedAccum(edges: DataFrame,
+                                   grid: DataFrame): DataFrame =
+    DagFold.slotFold("weightedAccum",
+      grid.select(col("r"), col("c"), lit(1.0).as("init"),
+        lit(0.0).as("sa"), lit(0.0).as("sb")),
+      edges.withColumn("flag", lit(false))) { (a, w, _, _, _) => w * a }
 
   /**
    * FD8 weighted edges (HydroTools/FlowAccumFD8.java:400-436): flow
@@ -1029,9 +933,8 @@ object Terrain {
 
   /** FD8 flow accumulation (FlowAccumFD8.java): 1 + relief-weighted
     * multi-direction inflow, via [[weightedAccum]]. */
-  def fd8Accum(grid: DataFrame, power: Double = 1.0,
-               rounds: Int = 24): DataFrame =
-    weightedAccum(fd8Edges(grid, power), grid, rounds)
+  def fd8Accum(grid: DataFrame, power: Double = 1.0): DataFrame =
+    weightedAccum(fd8Edges(grid, power), grid)
 
   /** MDInf neighbour order (GeasyTools/FlowAccumMDInf.java:50-52,
     * Seibert & McGlynn): m = 0 is north, sweeping west-about. Maps to
@@ -1212,12 +1115,11 @@ object Terrain {
     * the edges and the accumulation are memoized: geo_mdinf_accum /
     * geo_side_mdinf / geo_stream_heads_mdinf all derive them from
     * the same DEM in one session. */
-  def mdinfAccum(grid: DataFrame, hExp: Double = 1.0,
-                 rounds: Int = 24): DataFrame =
+  def mdinfAccum(grid: DataFrame, hExp: Double = 1.0): DataFrame =
     graft.core.Memo.cached(
-      graft.core.Memo.key(grid, s"mdinfAccum:$hExp:$rounds"),
+      graft.core.Memo.key(grid, s"mdinfAccum:$hExp"),
       grid.sparkSession) {
-      weightedAccum(mdinfEdges(grid, hExp), grid, rounds)
+      weightedAccum(mdinfEdges(grid, hExp), grid)
     }
 
   /** D8 steepest-descent direction in the MDINF neighbour order
@@ -1622,62 +1524,6 @@ object Terrain {
         coalesce(col("fa_left"), lit(0.0)).as("fa_left"))
   }
 
-  /** One-task mirror of [[streamHeadsMdinf]]'s Jacobi rounds —
-    * identical per-slot fold in identical order (see
-    * [[weightedAccumLocal]] for the bit-exactness rationale). */
-  private def thresholdAccumLocal(edges: DataFrame, base: DataFrame,
-                                  caThr: Double, rounds: Int)
-      : DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val tagged = base
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        lit(0.0).as("wm"), lit(false).as("d8"),
-        lit(-1).cast("int").as("slot"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), coalesce(col("wm"), lit(0.0)).as("wm"), col("d8"),
-        col("slot").cast("int").as("slot")))
-      .as[(Long, Long, Long, Long, Double, Boolean, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._7 == -1).map(t => (t._1, t._2))
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-      val n = cells.length
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      val inD8 = Array.ofDim[Boolean](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, wm, d8, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = wm; inD8(t)(j) = d8
-        case _ =>
-      }
-      var acc = Array.fill(n)(1.0)
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = 1.0
-          var j = 0
-          while (j < 8) {
-            if (inSrc(i)(j) >= 0) {
-              val a = acc(inSrc(i)(j))
-              s += (if (a <= caThr) inW(i)(j) * a
-                    else if (inD8(i)(j)) caThr else 0.0)
-            } else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i => (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
-
   /**
    * StreamHeadsMDInf (GeasyTools/src/plugins/StreamHeadsMDInf.java:
    * 253-540): find stream heads under the MDInf accumulation with
@@ -1689,61 +1535,37 @@ object Terrain {
    * stream water, can never be a head). Heads are the stream cells
    * no other stream cell's D8 send reaches.
    *
-   * Same synchronous-Jacobi execution as [[weightedAccum]] (the
-   * topological process order of the reference is reproduced by
-   * `rounds` >= the DAG depth; the per-slot fixed-order fold makes
-   * every round bit-exact against the unrolled SQL oracle), with the
-   * one-task mirror below [[localFixpointMaxRows]] and one shuffle
-   * of the cell relation per round above it.
+   * The same [[DagFold.slotFold]] as [[weightedAccum]]: each cell is
+   * summed once its sources are final, which reproduces the
+   * reference's topological process order on any DAG, and the
+   * per-slot fixed-order fold is bit-exact against the unrolled SQL
+   * oracle run past the DAG depth.
    */
   def streamHeadsMdinf(grid: DataFrame, caThr: Double,
-                       hExp: Double = 1.0, rounds: Int = 24)
-      : DataFrame = {
+                       hExp: Double = 1.0): DataFrame = {
     val em = mdinfEdges(grid, hExp)
       .select(col("r"), col("c"), col("tr"), col("tc"),
-        (lit(7) - col("j")).cast("int").as("slot"), col("w").as("wm"))
+        (lit(7) - col("j")).cast("int").as("j"), col("w").as("wm"))
     val ed = d8DirMdinf(grid).where(col("dir").isNotNull)
       .select(col("r"), col("c"),
         (col("r") + mYdOf(col("dir"))).as("tr"),
         (col("c") + mXdOf(col("dir"))).as("tc"),
-        ((col("dir") + 4) % 8).cast("int").as("slot"))
+        ((col("dir") + 4) % 8).cast("int").as("j"))
       .localCheckpoint(true)
     // merge: one edge row per (source, target) carrying both the
     // MDInf portion (if any) and the D8-steepest flag (if any) —
     // the threshold on the source's value selects which one sends
     val edges = em
       .join(ed.withColumn("__d8", lit(true)),
-        Seq("r", "c", "tr", "tc", "slot"), "full_outer")
-      .select(col("r"), col("c"), col("tr"), col("tc"), col("slot"),
-        col("wm"), coalesce(col("__d8"), lit(false)).as("d8"))
-      .localCheckpoint(true)
-    val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    val acc =
-      if (base.count() <= localFixpointMaxRows)
-        thresholdAccumLocal(edges, base, caThr, rounds)
-      else {
-        var a = base.withColumn("acc", lit(1.0))
-        for (i <- 1 to rounds) {
-          val contribExpr =
-            when(col("__a") <= caThr,
-              coalesce(col("wm"), lit(0.0)) * col("__a"))
-              .otherwise(when(col("d8"), lit(caThr)).otherwise(lit(0.0)))
-          val contrib = edges
-            .join(a.select(col("r"), col("c"), col("acc").as("__a")),
-              Seq("r", "c"))
-            .groupBy(col("tr").as("r"), col("tc").as("c"))
-            .agg(sum(when(col("slot") === 0, contribExpr)).as("d0"),
-              (1 until 8).map(j =>
-                sum(when(col("slot") === j, contribExpr)).as(s"d$j")): _*)
-          a = base.join(contrib, Seq("r", "c"), "left")
-            .select(col("r"), col("c"),
-              (0 until 8).foldLeft(lit(1.0)) { (s, j) =>
-                s + coalesce(col(s"d$j"), lit(0.0))
-              }.as("acc"))
-          if (i % 2 == 0 && i < rounds) a = a.localCheckpoint(true)
-        }
-        a
-      }
+        Seq("r", "c", "tr", "tc", "j"), "full_outer")
+      .select(col("r"), col("c"), col("tr"), col("tc"), col("j"),
+        coalesce(col("wm"), lit(0.0)).as("w"),
+        coalesce(col("__d8"), lit(false)).as("flag"))
+    val acc = DagFold.slotFold("streamHeadsMdinf",
+      grid.select(col("r"), col("c"), lit(1.0).as("init"),
+        lit(0.0).as("sa"), lit(0.0).as("sb")), edges) { (a, w, d8, _, _) =>
+      if (a <= caThr) w * a else if (d8) caThr else 0.0
+    }
     // head = stream cell (acc > T) not fed by any stream cell's D8
     // send (the reference's output=0 mark, StreamHeadsMDInf.java:525)
     val blocked = ed
@@ -1810,13 +1632,12 @@ object Terrain {
    * MassFluxD8 (HydroTools/MassFluxD8.java:274-305): each cell starts
    * at its loading; along the D8 pointer DAG a cell passes
    * max(0, (flux - absorption) * efficiency) to its downslope
-   * neighbour. Input grid carries (r, c, v, load, eff, absorp);
-   * executed as synchronous direction-slot Jacobi rounds (the
-   * [[weightedAccum]] exactness scheme, with the source-side
-   * clamp transform) — stationary once the longest flowpath has
-   * propagated, bit-exact vs the identically-unrolled SQL oracle.
+   * neighbour. Input grid carries (r, c, v, load, eff, absorp); run as
+   * the [[weightedAccum]] direction-slot fold with the source-side
+   * clamp transform ([[massFluxRun]]) — exact on any DAG, bit-exact vs
+   * the unrolled SQL oracle run past the longest flowpath.
    */
-  def massFluxD8(grid: DataFrame, rounds: Int = 24): DataFrame = {
+  def massFluxD8(grid: DataFrame): DataFrame = {
     val ptr = d8Pointer(grid.select(col("r"), col("c"), col("v")))
     def fromPtr(ds: Seq[Int]) = (0 until 8).foldLeft(lit(0)) { (a, i) =>
       when(col("ptr") === (1 << i), lit(ds(i))).otherwise(a)
@@ -1829,8 +1650,7 @@ object Terrain {
         (col("r") + fromPtr(dY)).as("tr"),
         (col("c") + fromPtr(dX)).as("tc"),
         lit(1.0).as("w"), jIdx.as("j"))
-      .localCheckpoint(true)
-    massFluxRun(edges, grid, rounds)
+    massFluxRun(edges, grid)
   }
 
   /**
@@ -1842,102 +1662,20 @@ object Terrain {
    * proportional split of the outflux by the Dinf angle is exactly
    * the dinfEdges weight pair.)
    */
-  def massFluxDinf(grid: DataFrame, rounds: Int = 24): DataFrame = {
-    val edges = dinfEdges(grid.select(col("r"), col("c"), col("v")))
-      .localCheckpoint(true)
-    massFluxRun(edges, grid, rounds)
-  }
+  def massFluxDinf(grid: DataFrame): DataFrame =
+    massFluxRun(dinfEdges(grid.select(col("r"), col("c"), col("v"))), grid)
 
-  /** Shared mass-flux Jacobi over weighted edges (r, c, tr, tc, w, j):
-    * acc = load + Σ_slots w·max((acc_src − absorp_src)·eff_src, 0),
-    * slots added in fixed textual order (at most one edge per
-    * (target, slot), so no ordering freedom — see [[weightedAccum]]).
-    * Size-adaptive via [[localFixpointMaxRows]]. */
-  private def massFluxRun(edges: DataFrame, grid: DataFrame,
-                          rounds: Int): DataFrame = {
-    val attrs = grid.select(col("r"), col("c"), col("load"),
-      col("eff"), col("absorp")).localCheckpoint(true)
-    if (attrs.count() <= localFixpointMaxRows)
-      return massFluxLocal(edges, attrs, rounds)
-    var acc = attrs.select(col("r"), col("c"), col("load").as("acc"))
-    for (i <- 1 to rounds) {
-      val send = col("w") *
-        greatest((col("__a") - col("absorp")) * col("eff"), lit(0.0))
-      val contrib = edges
-        .join(acc.select(col("r"), col("c"), col("acc").as("__a"))
-          .join(attrs, Seq("r", "c")), Seq("r", "c"))
-        .groupBy(col("tr").as("r"), col("tc").as("c"))
-        .agg(sum(when(col("j") === 0, send)).as("d0"),
-          (1 until 8).map(j =>
-            sum(when(col("j") === j, send)).as(s"d$j")): _*)
-      acc = attrs.join(contrib, Seq("r", "c"), "left")
-        .select(col("r"), col("c"),
-          (0 until 8).foldLeft(col("load")) { (s, j) =>
-            s + coalesce(col(s"d$j"), lit(0.0))
-          }.as("acc"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
+  /** Shared mass-flux fold over weighted edges (r, c, tr, tc, w, j):
+    * acc = load + Σ_slots w·max((acc_src − absorp_src)·eff_src, 0), a
+    * [[DagFold.slotFold]] with the source's absorp and eff as its
+    * attributes. */
+  private def massFluxRun(edges: DataFrame, grid: DataFrame): DataFrame =
+    DagFold.slotFold("massFlux",
+      grid.select(col("r"), col("c"), col("load").as("init"),
+        col("absorp").as("sa"), col("eff").as("sb")),
+      edges.withColumn("flag", lit(false))) { (a, w, _, absorp, eff) =>
+      w * math.max((a - absorp) * eff, 0.0)
     }
-    acc
-  }
-
-  /** One-task replication of [[massFluxRun]]'s rounds (see
-    * [[weightedAccumLocal]] — same exactness argument; the fold seeds
-    * at the cell's own loading and each slot adds the weighted clamped
-    * send from its unique source). */
-  private def massFluxLocal(edges: DataFrame, attrs: DataFrame,
-                            rounds: Int): DataFrame = {
-    val spark = attrs.sparkSession
-    import spark.implicits._
-    val tagged = attrs
-      .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        col("load"), col("eff"), col("absorp"), lit(0.0).as("w"),
-        lit(-1).cast("int").as("j"))
-      .unionByName(edges.select(col("r"), col("c"), col("tr"),
-        col("tc"), lit(0.0).as("load"), lit(0.0).as("eff"),
-        lit(0.0).as("absorp"), col("w"), col("j").cast("int").as("j")))
-      .as[(Long, Long, Long, Long, Double, Double, Double, Double, Int)]
-    tagged.coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val cells = rows.filter(_._9 == -1)
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-      cells.zipWithIndex.foreach { case (t, i) => idx((t._1, t._2)) = i }
-      val n = cells.length
-      val load = cells.map(_._5)
-      val eff = cells.map(_._6)
-      val absorp = cells.map(_._7)
-      val inSrc = Array.fill(n, 8)(-1)
-      val inW = Array.ofDim[Double](n, 8)
-      rows.foreach {
-        case (r, c, tr, tc, _, _, _, w, j) if j >= 0 =>
-          val t = idx((tr, tc))
-          require(inSrc(t)(j) == -1, s"duplicate edge slot ($tr,$tc,$j)")
-          inSrc(t)(j) = idx((r, c)); inW(t)(j) = w
-        case _ =>
-      }
-      var acc = load.clone()
-      for (_ <- 1 to rounds) {
-        val nxt = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var s = load(i)
-          var j = 0
-          while (j < 8) {
-            val si = inSrc(i)(j)
-            if (si >= 0)
-              s += inW(i)(j) *
-                math.max((acc(si) - absorp(si)) * eff(si), 0.0)
-            else s += 0.0
-            j += 1
-          }
-          nxt(i) = s
-          i += 1
-        }
-        acc = nxt
-      }
-      cells.indices.iterator.map(i =>
-        (cells(i)._1, cells(i)._2, acc(i)))
-    }.toDF("r", "c", "acc")
-  }
 
   /**
    * Rho8 stochastic flow pointer (HydroTools/FlowPointerRho8.java:
@@ -2152,15 +1890,11 @@ object Terrain {
    * summed length of every upstream channel segment, and the longest
    * along-stream distance from any channel head. Lengths are exact
    * nano-integers ([[DiagNano]]) so sum/max are order-independent
-   * across engines. Jacobi rounds over the stream-to-stream D8 edges
-   * (one-task Kahn fast path below [[localFixpointMaxRows]], like
-   * [[upslopeFlowpathStats]]); rounds bound the propagated chain
-   * length in the distributed arm.
+   * across engines. A Kahn fold over the stream-to-stream D8 edges,
+   * the same [[DagFold]] as [[upslopeFlowpathStats]].
    */
-  def upstreamChannelStats(grid: DataFrame, threshold: Long,
-                           rounds: Int = 64): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
+  def upstreamChannelStats(grid: DataFrame,
+                           threshold: Long): DataFrame = {
     val (stream, sedges0, _) = streamGraph(grid, threshold)
     val dNano = when(
       abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
@@ -2169,63 +1903,32 @@ object Terrain {
       .select(col("r"), col("c"), col("tr"), col("tc"), dNano.as("d"))
       .localCheckpoint(true)
     val base = stream.localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
-      val tagged = base
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          lit(-1L).as("d"))
-        .unionByName(edges)
-        .as[(Long, Long, Long, Long, Long)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._5 == -1L).map(t => (t._1, t._2))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)
-        val dist = Array.ofDim[Long](n)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, d) if d >= 0L =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; dist(s) = d; indeg(t) += 1
-          case _ =>
+    val n = base.count()
+    if (n <= localFixpointMaxRows)
+      return DagFold.successorFoldLocal("upstreamChannelStats",
+          base.withColumn("x", lit(0L)), edges,
+          Seq("total_upstream_nano", "head_dist_nano")) { g =>
+        val tot = new Array[Long](g.n)
+        val hd = new Array[Long](g.n)
+        g.forEachEdge { (i, t) =>
+          tot(t) += tot(i) + g.d(i)
+          hd(t) = math.max(hd(t), hd(i) + g.d(i))
         }
-        val tot = Array.ofDim[Long](n)
-        val hd = Array.ofDim[Long](n)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            tot(t) += tot(i) + dist(i)
-            val cand = hd(i) + dist(i)
-            if (cand > hd(t)) hd(t) = cand
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"stream graph has a cycle ($seen of $n)")
-        cells.indices.iterator.map(i =>
-          (cells(i)._1, cells(i)._2, tot(i), hd(i)))
-      }.toDF("r", "c", "total_upstream_nano", "head_dist_nano")
-    }
-    var acc = base.withColumn("tot", lit(0L)).withColumn("hd", lit(0L))
-    for (i <- 1 to rounds) {
+        Seq(tot, hd)
+      }
+    DagFold.untilStationary("upstreamChannelStats", n,
+        base.withColumn("tot", lit(0L)).withColumn("hd", lit(0L))) { acc =>
       val contrib = edges
         .join(acc.select(col("r"), col("c"), col("tot").as("__t"),
           col("hd").as("__h")), Seq("r", "c"))
         .groupBy(col("tr").as("r"), col("tc").as("c"))
         .agg(sum(col("__t") + col("d")).as("it"),
           max(col("__h") + col("d")).as("ih"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
+      base.join(contrib, Seq("r", "c"), "left")
         .select(col("r"), col("c"),
           coalesce(col("it"), lit(0L)).as("tot"),
           coalesce(col("ih"), lit(0L)).as("hd"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
-    }
-    acc.select(col("r"), col("c"), col("tot").as("total_upstream_nano"),
+    }.select(col("r"), col("c"), col("tot").as("total_upstream_nano"),
       col("hd").as("head_dist_nano"))
   }
 
@@ -2239,11 +1942,10 @@ object Terrain {
    * interpolated step is glen*d/drop and a path that dies before
    * dropping d emits 0 — mirrored literally here. Start cells that
    * are themselves pits emit NoData (absent rows). Path lengths are
-   * exact nano-int pairs; rounds bound the walked path length in the
-   * distributed arm (one-task walk below [[localFixpointMaxRows]]).
+   * exact nano-int pairs. One-task walk below [[localFixpointMaxRows]];
+   * above it the walkers step until every one has finished.
    */
-  def downslopeIndex(grid: DataFrame, d: Double,
-                     rounds: Int = 64): DataFrame = {
+  def downslopeIndex(grid: DataFrame, d: Double): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
     val ptr = d8Pointer(grid).localCheckpoint(true)
@@ -2255,7 +1957,8 @@ object Terrain {
           lit(DiagNano)).otherwise(lit(1000000000L)).as("stepn"))
       .localCheckpoint(true)
     val base = grid.select(col("r"), col("c"), col("v")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
+    val n = base.count()
+    if (n <= localFixpointMaxRows) {
       val tagged = base
         .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
           col("v").as("tz"), lit(-1L).as("stepn"))
@@ -2304,14 +2007,15 @@ object Terrain {
       }.toDF("r", "c", "dsi")
     }
     // distributed arm: advance every unfinished walker one D8 step per
-    // round; state is O(cells), each round one broadcast-ready join
-    var st = base.join(edges.select(col("r"), col("c")).distinct(),
+    // round until none is left; state is O(cells), each round one
+    // broadcast-ready join
+    val walkers = base.join(edges.select(col("r"), col("c")).distinct(),
         Seq("r", "c"))
       .select(col("r").as("sr"), col("c").as("sc"), col("v").as("zst"),
         col("r").as("cr"), col("c").as("cc"),
         lit(0L).as("ns"), lit(0L).as("nd"),
         lit(null).cast("double").as("out"), lit(false).as("done"))
-    for (i <- 1 to rounds) {
+    DagFold.untilStationary("downslopeIndex", n, walkers) { st =>
       val step = st.where(!col("done"))
         .join(edges.select(col("r").as("cr"), col("c").as("cc"),
           col("tr"), col("tc"), col("tz"), col("stepn")),
@@ -2334,10 +2038,8 @@ object Terrain {
           .when(col("tr").isNull && col("ns") + col("nd") > 0, lit(0.0))
           .otherwise(lit(null).cast("double")).as("out"),
         (col("tr").isNull || col("zst") - col("tz") >= d).as("done"))
-      st = st.where(col("done")).unionByName(adv)
-      if (i % 2 == 0 && i < rounds) st = st.localCheckpoint(true)
-    }
-    st.where(col("out").isNotNull)
+      st.where(col("done")).unionByName(adv)
+    }.where(col("out").isNotNull)
       .select(col("sr").as("r"), col("sc").as("c"),
         round(col("out"), 6).as("dsi"))
   }
@@ -3280,15 +2982,12 @@ object Terrain {
    * (max_len_nano; 0 with no inflow), the contributing-cell count
    * (n_paths, self included = D8 flow accumulation), and the total
    * arriving length (sum_len_nano). Exact nano-BIGINT lengths make
-   * every aggregate order-independent. Jacobi rounds over the
-   * reversed D8 DAG (rounds >= longest flowpath for the exact
-   * fixpoint); grids under [[localFixpointMaxRows]] run one
-   * in-memory topological pass in a single task.
+   * every aggregate order-independent. A Kahn fold over the D8 DAG
+   * ([[DagFold]]): one in-memory pass in a single task below
+   * [[localFixpointMaxRows]], distributed rounds until stationary
+   * above it.
    */
-  def upslopeFlowpathStats(grid: DataFrame,
-                           rounds: Int = 64): DataFrame = {
-    val spark = grid.sparkSession
-    import spark.implicits._
+  def upslopeFlowpathStats(grid: DataFrame): DataFrame = {
     val dNano = when(
       abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
       lit(DiagNano)).otherwise(lit(1000000000L))
@@ -3297,54 +2996,24 @@ object Terrain {
         dNano.as("d"))
       .localCheckpoint(true)
     val base = grid.select(col("r"), col("c")).localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
-      // one-task exact pass: Kahn order over the D8 DAG
-      val tagged = base
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          lit(-1L).as("d"))
-        .unionByName(edges)
-        .as[(Long, Long, Long, Long, Long)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._5 == -1L).map(t => (t._1, t._2))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx(k) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)   // successor index
-        val dist = Array.ofDim[Long](n)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, d) if d >= 0L =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; dist(s) = d; indeg(t) += 1
-          case _ =>
+    val n = base.count()
+    if (n <= localFixpointMaxRows)
+      return DagFold.successorFoldLocal("upslopeFlowpathStats",
+          base.withColumn("x", lit(0L)), edges,
+          Seq("max_len_nano", "n_paths", "sum_len_nano")) { g =>
+        val mx = new Array[Long](g.n)
+        val cnt = Array.fill(g.n)(1L)
+        val sm = new Array[Long](g.n)
+        g.forEachEdge { (i, t) =>
+          mx(t) = math.max(mx(t), mx(i) + g.d(i))
+          cnt(t) += cnt(i)
+          sm(t) += sm(i) + cnt(i) * g.d(i)
         }
-        val mx = Array.ofDim[Long](n)
-        val cnt = Array.fill(n)(1L)
-        val sm = Array.ofDim[Long](n)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            val cand = mx(i) + dist(i)
-            if (cand > mx(t)) mx(t) = cand
-            cnt(t) += cnt(i)
-            sm(t) += sm(i) + cnt(i) * dist(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"D8 graph has a cycle ($seen of $n)")
-        cells.indices.iterator.map(i =>
-          (cells(i)._1, cells(i)._2, mx(i), cnt(i), sm(i)))
-      }.toDF("r", "c", "max_len_nano", "n_paths", "sum_len_nano")
-    }
-    var acc = base.withColumn("mx", lit(0L))
-      .withColumn("cnt", lit(1L)).withColumn("sm", lit(0L))
-    for (i <- 1 to rounds) {
+        Seq(mx, cnt, sm)
+      }
+    DagFold.untilStationary("upslopeFlowpathStats", n,
+        base.withColumn("mx", lit(0L)).withColumn("cnt", lit(1L))
+          .withColumn("sm", lit(0L))) { acc =>
       val contrib = edges
         .join(acc.select(col("r"), col("c"), col("mx").as("__m"),
           col("cnt").as("__n"), col("sm").as("__s")), Seq("r", "c"))
@@ -3352,14 +3021,12 @@ object Terrain {
         .agg(max(col("__m") + col("d")).as("im"),
           sum(col("__n")).as("in"),
           sum(col("__s") + col("__n") * col("d")).as("is"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
+      base.join(contrib, Seq("r", "c"), "left")
         .select(col("r"), col("c"),
           coalesce(col("im"), lit(0L)).as("mx"),
           (lit(1L) + coalesce(col("in"), lit(0L))).as("cnt"),
           coalesce(col("is"), lit(0L)).as("sm"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
-    }
-    acc.select(col("r"), col("c"), col("mx").as("max_len_nano"),
+    }.select(col("r"), col("c"), col("mx").as("max_len_nano"),
       col("cnt").as("n_paths"), col("sm").as("sum_len_nano"))
   }
 
@@ -3489,14 +3156,10 @@ object Terrain {
    * pure function of the oracle-checked acc6 surface, so both
    * engines derive the identical pointer. Costs >= 1 make acc6
    * strictly decrease along the backlink (cycle-free). Path counts
-   * propagate by Jacobi rounds over the backlink DAG; grids under
-   * [[localFixpointMaxRows]] run one in-memory Kahn pass.
+   * propagate by a Kahn fold over the backlink DAG ([[DagFold]]).
    */
   def costPathway(cost: DataFrame, sources: DataFrame, dests: DataFrame,
-                  nRows: Long, nCols: Long,
-                  rounds: Int = 256): DataFrame = {
-    val spark = cost.sparkSession
-    import spark.implicits._
+                  nRows: Long, nCols: Long): DataFrame = {
     val acc6 = costAccumulation(cost, sources, nRows, nCols)
       .select(col("r"), col("c"), round(col("acc"), 6).as("a6"))
       .localCheckpoint(true)
@@ -3528,59 +3191,26 @@ object Terrain {
         Seq("r", "c"), "left")
       .select(col("r"), col("c"), coalesce(col("__d"), lit(0L)).as("load"))
       .localCheckpoint(true)
-    if (base.count() <= localFixpointMaxRows) {
-      val tagged = base
-        .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-          col("load"), lit(true).as("isCell"))
-        .unionByName(bl.select(col("r"), col("c"), col("tr"), col("tc"),
-          lit(0L).as("load"), lit(false).as("isCell")))
-        .as[(Long, Long, Long, Long, Long, Boolean)]
-      return tagged.coalesce(1).mapPartitions { it =>
-        val rows = it.toArray
-        val cells = rows.filter(_._6).map(t => (t._1, t._2, t._5))
-        val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]
-        cells.zipWithIndex.foreach { case (k, i) => idx((k._1, k._2)) = i }
-        val n = cells.length
-        val out = Array.fill(n)(-1)
-        val indeg = Array.ofDim[Int](n)
-        rows.foreach {
-          case (r, c, tr, tc, _, false) =>
-            val s = idx((r, c)); val t = idx((tr, tc))
-            out(s) = t; indeg(t) += 1
-          case _ =>
-        }
-        val cnt = cells.map(_._3)
-        val stack = scala.collection.mutable.Stack[Int]()
-        (0 until n).foreach(i => if (indeg(i) == 0) stack.push(i))
-        var seen = 0
-        while (stack.nonEmpty) {
-          val i = stack.pop(); seen += 1
-          val t = out(i)
-          if (t >= 0) {
-            cnt(t) += cnt(i)
-            indeg(t) -= 1
-            if (indeg(t) == 0) stack.push(t)
-          }
-        }
-        require(seen == n, s"backlink graph has a cycle ($seen of $n)")
-        cells.indices.iterator
-          .filter(cnt(_) > 0L)
-          .map(i => (cells(i)._1, cells(i)._2, cnt(i)))
-      }.toDF("r", "c", "n_paths")
-    }
-    var acc = base.withColumnRenamed("load", "cnt")
-    for (i <- 1 to rounds) {
+    val n = base.count()
+    if (n <= localFixpointMaxRows)
+      return DagFold.successorFoldLocal("costPathway",
+          base.withColumnRenamed("load", "x"),
+          bl.withColumn("d", lit(0L)), Seq("n_paths")) { g =>
+        val cnt = g.x.clone()
+        g.forEachEdge((i, t) => cnt(t) += cnt(i))
+        Seq(cnt)
+      }.where(col("n_paths") > 0)
+    DagFold.untilStationary("costPathway", n,
+        base.withColumnRenamed("load", "cnt")) { acc =>
       val contrib = bl
         .join(acc.select(col("r"), col("c"), col("cnt").as("__n")),
           Seq("r", "c"))
         .groupBy(col("tr").as("r"), col("tc").as("c"))
         .agg(sum(col("__n")).as("in"))
-      acc = base.join(contrib, Seq("r", "c"), "left")
+      base.join(contrib, Seq("r", "c"), "left")
         .select(col("r"), col("c"),
           (col("load") + coalesce(col("in"), lit(0L))).as("cnt"))
-      if (i % 2 == 0 && i < rounds) acc = acc.localCheckpoint(true)
-    }
-    acc.where(col("cnt") > 0)
+    }.where(col("cnt") > 0)
       .select(col("r"), col("c"), col("cnt").as("n_paths"))
   }
 

@@ -3,11 +3,13 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import FixpointArms.both
+
 /** The size-adaptive fixpoints must produce BIT-IDENTICAL results on
   * both strategies: the one-task local kernel (small-relation path)
   * and the distributed rounds (the 100 TB path). Each test runs the
-  * same operator with `localFixpointMaxRows` at its default (local
-  * kernel) and forced to 0 (distributed), and compares exactly. */
+  * same operator with `localFixpointMaxRows` unlimited (local kernel)
+  * and forced to 0 (distributed), and compares exactly. */
 class FixpointSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -17,23 +19,10 @@ class FixpointSpec extends AnyFunSuite {
       yield (r, c, ((r * nC + c) * 37 % 1000).toDouble / 10.0))
       .toDF("r", "c", "v")
 
-  private def both(run: () => Map[(Long, Long), Any]): Unit = {
-    val saved = Terrain.localFixpointMaxRows
-    try {
-      Terrain.localFixpointMaxRows = Long.MaxValue
-      val local = run()
-      Terrain.localFixpointMaxRows = 0L
-      val dist = run()
-      assert(local.keySet == dist.keySet)
-      local.foreach { case (k, v) =>
-        assert(v == dist(k), s"cell $k: local=$v dist=${dist(k)}")
-      }
-    } finally Terrain.localFixpointMaxRows = saved
-  }
-
   test("flow accumulation: local Kahn == tiled packet rounds") {
     val g = hashGrid(20, 25)
-    both(() => Terrain.flowAccumD8(g).collect()
+    // flowAccumD8 is memoized: a fresh input per arm defeats the memo
+    both(() => Terrain.flowAccumD8(g.localCheckpoint()).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap)
   }
 
@@ -70,13 +59,13 @@ class FixpointSpec extends AnyFunSuite {
 
   test("fd8 accumulation: local Jacobi == distributed rounds") {
     val g = hashGrid(20, 25)
-    both(() => Terrain.fd8Accum(g, 1.0, rounds = 24).collect()
+    both(() => Terrain.fd8Accum(g, 1.0).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
   }
 
   test("dinf accumulation: local Jacobi == distributed rounds") {
     val g = hashGrid(20, 25)
-    both(() => Terrain.dinfAccum(g, rounds = 24).collect()
+    both(() => Terrain.dinfAccum(g).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
   }
 
@@ -134,7 +123,49 @@ class FixpointSpec extends AnyFunSuite {
       .withColumn("load", col("v") / 10.0)
       .withColumn("eff", lit(0.9))
       .withColumn("absorp", lit(0.5))
-    both(() => Terrain.massFluxD8(g, rounds = 24).collect()
+    both(() => Terrain.massFluxD8(g).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
+  }
+
+  test("mdinf accumulation: local Kahn == distributed rounds") {
+    val g = hashGrid(20, 25)
+    // mdinfAccum is memoized: a fresh input per arm defeats the memo
+    both(() => Terrain.mdinfAccum(g.localCheckpoint(), 1.0).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
+  }
+
+  test("mass flux dinf: local Kahn == distributed rounds") {
+    val g = hashGrid(20, 25)
+      .withColumn("load", col("v") / 10.0)
+      .withColumn("eff", lit(0.8) + (col("r") % 3) * lit(0.05))
+      .withColumn("absorp", (col("c") % 4) * lit(0.01))
+    both(() => Terrain.massFluxDinf(g).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap)
+  }
+
+  test("stream heads mdinf: local Kahn == distributed rounds") {
+    val g = hashGrid(20, 25)
+    val heads = both(() => Terrain.streamHeadsMdinf(g, caThr = 5.0)
+      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2))
+      .toMap)
+    assert(heads.values.exists(_ == 1), "some stream heads")
+  }
+
+  test("upslope flowpath stats: local Kahn == distributed rounds") {
+    val g = hashGrid(20, 25)
+    both(() => Terrain.upslopeFlowpathStats(g).collect()
+      .map(x => (x.getLong(0), x.getLong(1)) ->
+        (x.getLong(2), x.getLong(3), x.getLong(4))).toMap)
+  }
+
+  test("cost pathway: local Kahn == distributed rounds") {
+    val g = hashGrid(20, 25)
+    val cost = g.select(col("r"), col("c"), (col("v") / 100.0 + 1.0).as("v"))
+    val sources = g.where(col("v") >= 97.0).select("r", "c")
+    val dests = g.where(col("v") <= 5.0).select("r", "c")
+    val paths = both(() => Terrain.costPathway(cost, sources, dests, 20, 25)
+      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2))
+      .toMap)
+    assert(paths.nonEmpty)
   }
 }

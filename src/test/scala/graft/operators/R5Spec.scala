@@ -81,7 +81,7 @@ class R5Spec extends AnyFunSuite {
 
   test("sideMdinf: total = right + left; non-stream cells are 0") {
     val g = Derived.partGrid(spark, dir)
-    val accum = Terrain.mdinfAccum(g, 1.0, 24)
+    val accum = Terrain.mdinfAccum(g, 1.0)
     val streams = accum.where(col("acc") > 5.0).select("r", "c")
     val s = Terrain.sideMdinf(g, accum, streams, caThr = 5.0)
       .collect()

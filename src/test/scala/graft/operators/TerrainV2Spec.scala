@@ -48,7 +48,7 @@ class TerrainV2Spec extends AnyFunSuite {
       it += 1
     }
     assert(converged, s"driver Jacobi did not converge in $it rounds")
-    val got = Terrain.dinfAccum(g, rounds = 24).collect()
+    val got = Terrain.dinfAccum(g).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap
     cells.foreach { k =>
       assert(math.abs(got(k) - acc(k)) < 1e-9, s"cell $k: ${got(k)} vs ${acc(k)}")
@@ -164,7 +164,7 @@ class TerrainV2Spec extends AnyFunSuite {
     }
     // mdinf accumulation conserves: sum(acc) = n + sum over edges of
     // w * acc(source) — every unit of generated flow is represented
-    val acc = Terrain.mdinfAccum(g, 1.0, rounds = 40).collect()
+    val acc = Terrain.mdinfAccum(g, 1.0).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     e.foreach { r =>
       val src = acc((r.getLong(0), r.getLong(1)))
