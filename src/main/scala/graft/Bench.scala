@@ -14,11 +14,6 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  /** Queries excluded from the benchmark loop (none since
-    * dedup_jaccard's PPJoin prefix-filter rewrite; clump and flow
-    * accumulation returned earlier with their tiled rewrites). */
-  private val excluded = Set.empty[String]
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -75,8 +70,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).collect {
-      case (name, fn) if !excluded.contains(name) &&
-          only.forall(_.contains(name)) =>
+      case (name, fn) if only.forall(_.contains(name)) =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
         catch { case e: Throwable =>

@@ -11,24 +11,26 @@ case class SlotRow(r: Long, c: Long, tr: Long, tc: Long, j: Int,
                    sb: Double)
 
 /** A successor-fold row gathered into one task: a cell (`edge` false,
-  * `x` its load) or the edge (r, c) -> (tr, tc) of length `x`. */
+  * `x` its load) or the edge (r, c) -> (tr, tc) with lengths `d`. */
 case class SuccRow(r: Long, c: Long, tr: Long, tc: Long, x: Long,
-                   edge: Boolean)
+                   d: Array[Long], edge: Boolean)
 
 /**
  * Topological folds over flow DAGs, the one mechanism behind the
  * accumulation tools (FlowAccumD8/Dinf/FD8/MDInf, MassFluxD8/Dinf,
  * StreamHeadsMDInf, the upslope-flowpath family, CostPathway and the
- * upstream-channel lengths). A fold computes each cell from the FINAL
- * values of its upstream neighbours, so it has one exact answer on any
- * DAG, however long its flowpaths.
+ * upstream-channel lengths) and the downstream traces (Watershed,
+ * Subbasins, flowpath lengths, StreamLinkID: [[resolvePointers]] and
+ * [[closure]]). A fold computes each cell from the FINAL values of its
+ * upstream neighbours, so it has one exact answer on any DAG, however
+ * long its flowpaths.
  *
  * Two arms, switched on [[Terrain.localFixpointMaxRows]]:
  *  - one task: cells and edges gathered into primitive arrays and
  *    visited once in Kahn order ([[kahnOrder]]);
- *  - distributed: synchronous Jacobi rounds, a join and an
- *    aggregation each, run until a round changes no cell
- *    ([[untilStationary]]).
+ *  - distributed: synchronous rounds (a Jacobi step, or a pointer
+ *    doubling step on single-successor graphs) run until a round
+ *    changes no cell ([[untilStationary]]).
  * Both fail, naming the operator, when the graph has a cycle.
  */
 object DagFold {
@@ -70,28 +72,38 @@ object DagFold {
   }
 
   /** Distributed arm: applies the synchronous round `step` to `init`
-    * until a round changes no row. On a DAG of `n` cells that happens
-    * within n rounds, so a change in a later round means a cycle, and
-    * the loop fails naming `op`. Every round is materialized: the
-    * stationarity test reads it anyway, and the truncated lineage
-    * keeps nested join+pivot rounds from blowing up the optimizer's
-    * constraint propagation. */
-  def untilStationary(op: String, n: Long, init: DataFrame)
+    * until a round changes no row, as judged by `changed(next, cur)`
+    * (by default an anti-join of the two rounds). On an acyclic graph
+    * that happens within `maxRounds` rounds (n for a Jacobi fold over
+    * n cells, [[doublingRounds]] for pointer doubling), so a change in
+    * a later round means a cycle, and the loop fails naming `op`.
+    * Every round is materialized: the stationarity test reads it
+    * anyway, and the truncated lineage keeps nested join+pivot rounds
+    * from blowing up the optimizer's constraint propagation. */
+  def untilStationary(op: String, maxRounds: Long, init: DataFrame,
+                      changed: (DataFrame, DataFrame) => Boolean =
+                        (next, cur) => !next.except(cur).isEmpty)
                      (step: DataFrame => DataFrame): DataFrame = {
     var cur = init
     var round = 0L
-    var changed = true
-    while (changed) {
+    var moved = true
+    while (moved) {
       round += 1
       val next = step(cur).localCheckpoint(true)
-      changed = !next.except(cur).isEmpty
-      require(!changed || round <= n,
-        s"$op: still changing after $round rounds on $n cells, " +
-          "so the flow graph has a cycle")
+      moved = changed(next, cur)
+      require(!moved || round <= maxRounds,
+        s"$op: still changing after $round rounds, past the $maxRounds " +
+          "an acyclic graph needs, so the flow graph has a cycle")
       cur = next
     }
     cur
   }
+
+  /** Rounds after which pointer doubling over `n` cells has stopped
+    * changing: a chain has at most n - 1 edges, and round t jumps
+    * 2^t of them, so floor(log2 n) + 1 rounds suffice. */
+  private def doublingRounds(n: Long): Long =
+    64 - java.lang.Long.numberOfLeadingZeros(n)
 
   /**
    * Slot fold: acc = init + Σ_{j=0..7} transfer(slot j) per cell, from
@@ -175,49 +187,159 @@ object DagFold {
     }.toDF("r", "c", "acc")
   }
 
-  /** A single-successor DAG gathered into one task: per cell its load
-    * `x`, successor `next` (-1 at outlets) and out-edge length `d`. */
-  final class SuccessorDag(val n: Int, val x: Array[Long],
-                           next: Array[Int], val d: Array[Long],
+  /** A single-successor DAG gathered into one task: per cell its
+    * coordinates (`r`, `c`), load `x`, successor `next` (-1 at
+    * outlets) and out-edge lengths `d(k)` (0 at outlets). */
+  final class SuccessorDag(val n: Int, val r: Array[Long],
+                           val c: Array[Long], val x: Array[Long],
+                           next: Array[Int], val d: Seq[Array[Long]],
                            order: Array[Int]) {
     /** Applies `update(i, t)` to every edge i -> t in Kahn order, so
       * each runs after all of i's in-edges. */
     def forEachEdge(update: (Int, Int) => Unit): Unit =
       order.foreach(i => if (next(i) >= 0) update(i, next(i)))
+
+    /** Applies `update(i, t)` to every edge i -> t in reverse Kahn
+      * order, so each runs after t's own out-edge. */
+    def forEachEdgeReversed(update: (Int, Int) => Unit): Unit =
+      order.reverseIterator.foreach(i =>
+        if (next(i) >= 0) update(i, next(i)))
   }
 
   /** One-task successor fold over `cells` (r, c, x) and `edges`
-    * (r, c, tr, tc, d), at most one edge per source; `fold` returns one
-    * Long column per name in `outCols`. Output (r, c, outCols...). */
+    * (r, c, tr, tc, lengths...), at most one edge per source, each
+    * name in `lengths` a Long edge column; `fold` returns one Long
+    * column per name in `outCols`. Output (r, c, outCols...). */
   def successorFoldLocal(op: String, cells: DataFrame, edges: DataFrame,
-                         outCols: Seq[String])
+                         outCols: Seq[String], lengths: Seq[String] = Nil)
                         (fold: SuccessorDag => Seq[Array[Long]]): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
+    val noLengths = typedLit(Array.empty[Long])
+    val lens =
+      if (lengths.isEmpty) noLengths
+      else array(lengths.map(col(_).cast("long")): _*)
+    val nLen = lengths.size
     val tagged = cells
       .select(col("r"), col("c"), lit(0L).as("tr"), lit(0L).as("tc"),
-        col("x"), lit(false).as("edge"))
+        col("x"), noLengths.as("d"), lit(false).as("edge"))
       .unionByName(edges.select(col("r"), col("c"), col("tr"), col("tc"),
-        col("d").as("x"), lit(true).as("edge")))
+        lit(0L).as("x"), lens.as("d"), lit(true).as("edge")))
       .as[SuccRow]
     tagged.coalesce(1).mapPartitions { it =>
       val (es, cs) = it.toArray.partition(_.edge)
       val idx = cs.iterator.map(x => (x.r, x.c)).zipWithIndex.toMap
       val n = cs.length
       val next = Array.fill(n)(-1)
-      val d = new Array[Long](n)
+      val d = Seq.fill(nLen)(new Array[Long](n))
       for (e <- es) {
         val s = idx((e.r, e.c))
         require(next(s) < 0, s"$op: cell (${e.r},${e.c}) has two successors")
-        next(s) = idx((e.tr, e.tc)); d(s) = e.x
+        next(s) = idx((e.tr, e.tc))
+        for (k <- 0 until nLen) d(k)(s) = e.d(k)
       }
       val srcs = (0 until n).filter(next(_) >= 0).toArray
       val order = kahnOrder(op, n, srcs, srcs.map(next))
-      val outs = fold(new SuccessorDag(n, cs.map(_.x), next, d, order))
+      val outs = fold(new SuccessorDag(n, cs.map(_.r), cs.map(_.c),
+        cs.map(_.x), next, d, order))
       cs.indices.iterator.map(i =>
         (cs(i).r, cs(i).c, outs.map(_(i)).toArray))
     }.toDF("r", "c", "__v")
       .select(col("r") +: col("c") +:
         outCols.zipWithIndex.map { case (nm, k) => col("__v")(k).as(nm) }: _*)
+  }
+
+  /**
+   * Pointer resolution over a single-successor graph, the downstream
+   * trace behind Watershed, Subbasins, StreamLinkID and the
+   * stream-absorbing trace tools. `next` (r, c, tr, tc, sums...) gives
+   * every cell one successor; absorbing cells point to themselves with
+   * zero sums. Output (r, c, tr, tc, sums...): (tr, tc) is the
+   * absorbing cell the cell's chain ends in, and each Long column named
+   * in `sums` is added up along the chain (integers, so exact in any
+   * composition order). `next` must be materialized: both arms re-scan
+   * it.
+   *
+   * Two arms, switched on [[Terrain.localFixpointMaxRows]]:
+   *  - one task: a [[SuccessorDag]] visited in reverse Kahn order, so
+   *    each cell reads its successor's final root and sums;
+   *  - distributed: pointer doubling, each round replacing a cell's
+   *    successor with its successor's successor and adding their sums,
+   *    run until stationary in O(log longest chain) rounds.
+   * Both fail naming `op` on a cycle: Kahn order leaves its cells
+   * unordered, and under doubling the hop count composed alongside the
+   * sums keeps growing past [[doublingRounds]].
+   */
+  def resolvePointers(op: String, next: DataFrame,
+                      sums: Seq[String] = Nil): DataFrame = {
+    val out = Seq("r", "c", "tr", "tc") ++ sums
+    val n = next.count()
+    if (n <= Terrain.localFixpointMaxRows)
+      return successorFoldLocal(op,
+          next.select(col("r"), col("c"), lit(0L).as("x")),
+          next.where(col("tr") =!= col("r") || col("tc") =!= col("c")),
+          Seq("tr", "tc") ++ sums, sums) { g =>
+        val root = Array.range(0, g.n)
+        val acc = g.d.map(_.clone())
+        g.forEachEdgeReversed { (i, t) =>
+          root(i) = root(t)
+          acc.foreach(a => a(i) += a(t))
+        }
+        Seq(root.map(g.r(_)), root.map(g.c(_))) ++ acc
+      }
+    val carried = "__k" +: sums
+    val hops = (col("tr") =!= col("r") || col("tc") =!= col("c"))
+      .cast("long").as("__k")
+    untilStationary(op, doublingRounds(n),
+        next.select(out.map(col) :+ hops: _*)) { cur =>
+      val hop = cur.select(col("r").as("__hr") +: col("c").as("__hc") +:
+        col("tr").as("__tr") +: col("tc").as("__tc") +:
+        carried.map(s => col(s).as(s"__h$s")): _*)
+      cur.join(hop, col("tr") === col("__hr") && col("tc") === col("__hc"))
+        .select(col("r") +: col("c") +: col("__tr").as("tr") +:
+          col("__tc").as("tc") +:
+          carried.map(s => (col(s) + col(s"__h$s")).as(s)): _*)
+    }.select(out.map(col): _*)
+  }
+
+  /**
+   * Reachability closure of a single-successor graph by doubling: every
+   * (sr, sc, r, c) with (r, c) on the chain from (sr, sc) under `edges`
+   * (r, c, tr, tc), identity rows of `cells` (r, c) included. With
+   * `dist` naming a Long edge column, each row also carries `dn`, the
+   * summed `dist` from (sr, sc) to (r, c) (0 on identity rows); chains
+   * are unique, so each (start, cell) pair has one distance and
+   * `distinct` is exact. O(log chain length) rounds, each a self-join,
+   * run by [[untilStationary]]; the closure holds O(cells x chain
+   * length) rows, the same bound as the walk CTEs the oracles use, so
+   * the stationarity test is a row count, not an anti-join of two
+   * closures: a round only adds rows (union + distinct), so an
+   * unchanged count is an unchanged closure.
+   */
+  def closure(op: String, cells: DataFrame, edges: DataFrame,
+              dist: Option[String] = None): DataFrame = {
+    val dn = dist.toSeq
+    val init = cells.select(col("r").as("sr") +: col("c").as("sc") +:
+        col("r") +: col("c") +: dn.map(_ => lit(0L).as("dn")): _*)
+      .unionByName(edges.select(col("r").as("sr") +: col("c").as("sc") +:
+        col("tr").as("r") +: col("tc").as("c") +: dn.map(col(_).as("dn")): _*))
+      .localCheckpoint(true)
+    var rows = init.count()
+    def grew(next: DataFrame, cur: DataFrame): Boolean = {
+      val n = next.count()
+      val g = n != rows
+      rows = n
+      g
+    }
+    untilStationary(op, doublingRounds(rows), init, grew) { cur =>
+      val hop = cur.select(col("sr").as("__hr") +: col("sc").as("__hc") +:
+        col("r").as("__r") +: col("c").as("__c") +:
+        dn.map(_ => col("dn").as("__d")): _*)
+      cur.join(hop, col("r") === col("__hr") && col("c") === col("__hc"))
+        .select(col("sr") +: col("sc") +: col("__r").as("r") +:
+          col("__c").as("c") +:
+          dn.map(_ => (col("dn") + col("__d")).as("dn")): _*)
+        .unionByName(cur).distinct()
+    }
   }
 }

@@ -14,17 +14,15 @@ import org.apache.spark.sql.functions._
  */
 object GraphCC {
 
-  /** Edge-count threshold under which [[label]] runs one-task
-    * union-find instead of distributed label propagation (identical
-    * output — comp ids are integers with no ordering freedom). */
-  private[graft] var localMaxEdges: Long = 4000000L
-
   /** edges: (a, b) Long pairs. Returns (node, comp) with comp = the
     * component's minimum node id. Isolated nodes can be added by
-    * passing self-loops (a = b). */
+    * passing self-loops (a = b). Up to
+    * [[Terrain.localFixpointMaxRows]] edges run one-task union-find,
+    * more run distributed label propagation (identical output — comp
+    * ids are integers with no ordering freedom). */
   def label(edges: DataFrame): DataFrame = {
     val e0 = edges.select(col("a"), col("b")).localCheckpoint(true)
-    if (e0.count() <= localMaxEdges) {
+    if (e0.count() <= Terrain.localFixpointMaxRows) {
       val spark = e0.sparkSession
       import spark.implicits._
       return e0.as[(Long, Long)].coalesce(1).mapPartitions { it =>

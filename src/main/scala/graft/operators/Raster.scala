@@ -343,9 +343,10 @@ object Raster {
       .where(col("la") =!= col("lb")).distinct()
     // 3. resolve the label graph to per-component min labels via the
     //    shared size-adaptive CC labeller (one-task union-find below
-    //    GraphCC.localMaxEdges, hash-min + pointer jumping above it —
-    //    the r5 rewrite of the inline multi-round loop, which cost
-    //    4-6 scheduled jobs PER ROUND even for a ~50-label graph)
+    //    Terrain.localFixpointMaxRows edges, hash-min + pointer
+    //    jumping above it — the r5 rewrite of the inline multi-round
+    //    loop, which cost 4-6 scheduled jobs PER ROUND even for a
+    //    ~50-label graph)
     val selfLoops = labeled.select(col("lbl").as("a"),
       col("lbl").as("b")).distinct()
     val comp = GraphCC.label(

@@ -553,35 +553,33 @@ object Terrain {
    * along the D8 pointer DAG.
    *
    * Scale design — tile-local topological accumulation + boundary
-   * packet exchange: the grid is tiled (`tileSize`^2 cells); one
+   * packet exchange: the grid is tiled ([[TileSize]]^2 cells); one
    * `cogroup` pass runs the reference's recursive accumulation
    * SEQUENTIALLY inside each tile (cheap, in-memory) and emits a
    * "packet" wherever a flowpath crosses a tile edge; subsequent
    * rounds inject arriving packets and walk them through the tile in
    * one hop. Rounds scale with TILE crossings of the longest
    * flowpath, not its cell length — a 10^4-cell mainstem needs
-   * ~10^4/tileSize rounds instead of 10^4, and every round touches
+   * ~10^4/TileSize rounds instead of 10^4, and every round touches
    * only boundary packets. Per-cell increments are unioned and summed
    * once at the end.
    */
-  def flowAccumD8(grid: DataFrame, tileSize: Int = 16): DataFrame =
+  def flowAccumD8(grid: DataFrame): DataFrame =
     graft.core.Memo.cached(
-      graft.core.Memo.key(grid, s"flowAccumD8:$tileSize"),
-      grid.sparkSession) { flowAccumD8Impl(grid, tileSize) }
+      graft.core.Memo.key(grid, "flowAccumD8"),
+      grid.sparkSession) { flowAccumD8Impl(grid) }
 
-  private def flowAccumD8Impl(grid: DataFrame, tileSize: Int): DataFrame = {
+  /** Tile edge, in cells, of the tiled operators (flow accumulation,
+    * depression filling, cost accumulation): a tile is one sequential
+    * in-memory pass, and rounds scale with tile crossings. */
+  private val TileSize = 16L
+
+  private def flowAccumD8Impl(grid: DataFrame): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val cells = ptr.select(col("r"), col("c"),
-        (col("r") + dyExpr).as("tr"), (col("c") + dxExpr).as("tc"),
-        (col("ptr") === 0).as("sink"))
+    val cells = d8Next(d8Pointer(grid))
+      .select(col("r"), col("c"), col("tr"), col("tc"),
+        (col("ns") + col("nd") === 0).as("sink"))
       .as[(Long, Long, Long, Long, Boolean)]
       .map { case (r, c, tr, tc, sink) => FlowCell(r, c, tr, tc, sink) }
       .localCheckpoint(true)
@@ -593,15 +591,14 @@ object Terrain {
       val cs = cells.toDF()
       return DagFold.successorFoldLocal("flowAccumD8",
           cs.select(col("r"), col("c"), lit(1L).as("x")),
-          cs.where(!col("sink")).select(col("r"), col("c"), col("tr"),
-            col("tc"), lit(0L).as("d")), Seq("n_upslope")) { g =>
+          cs.where(!col("sink")), Seq("n_upslope")) { g =>
         val acc = g.x.clone()
         g.forEachEdge((i, t) => acc(t) += acc(i))
         Seq(acc)
       }
     }
 
-    val T = tileSize.toLong
+    val T = TileSize
     def tileOf(r: Long, c: Long): (Long, Long) =
       (Math.floorDiv(r, T), Math.floorDiv(c, T))
     val byTile = cells.groupByKey(f => tileOf(f.r, f.c))
@@ -746,21 +743,34 @@ object Terrain {
   private[graft] def d8Edges(grid: DataFrame): DataFrame =
     d8EdgesFromPtr(d8Pointer(grid))
 
-  /** Edge decode over an (r, c, ptr) frame. Callers that use the
-    * pointer frame AGAIN alongside the edges (e.g. [[numInflowing]])
-    * must pass a MATERIALIZED ptr: the when-chain over a plain `ptr`
-    * attribute is cheap, but over the full d8Pointer pipeline the
-    * fused stage duplicates the slope-array subtree per branch and
-    * overflows janino's 64 KB method limit. */
-  private[graft] def d8EdgesFromPtr(ptr: DataFrame): DataFrame = {
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    ptr.where(col("ptr") > 0).select(col("r"), col("c"),
-      (col("r") + dyExpr).as("tr"), (col("c") + dxExpr).as("tc"))
+  /** Edge decode over an (r, c, ptr) frame: [[d8Next]] of the
+    * flowing cells, (r, c, tr, tc). */
+  private[graft] def d8EdgesFromPtr(ptr: DataFrame): DataFrame =
+    d8Next(ptr.where(col("ptr") > 0)).select("r", "c", "tr", "tc")
+
+  /** The one decode of the D8 pointer encoding: per (r, c, ptr) row,
+    * (r, c, tr, tc, ns, nd) with (tr, tc) the cell `ptr` points to and
+    * ns / nd = 1 for a straight / diagonal step. Sinks (ptr = 0) and
+    * cells where `stop` holds point to themselves with zero steps.
+    * Callers that use the pointer frame AGAIN alongside the result
+    * (e.g. [[numInflowing]]) must pass a MATERIALIZED ptr: the
+    * when-chains over a plain `ptr` attribute are cheap, but over the
+    * full d8Pointer pipeline the fused stage duplicates the
+    * slope-array subtree per branch and overflows janino's 64 KB
+    * method limit. */
+  private[graft] def d8Next(ptr: DataFrame,
+                            stop: Column = lit(false)): DataFrame = {
+    def byPtr[T](f: Int => T, none: T): Column =
+      (0 until 8).foldLeft(lit(none)) { (acc, i) =>
+        when(col("ptr") === (1 << i), lit(f(i))).otherwise(acc)
+      }
+    val flows = col("ptr") > 0 && !stop
+    val diag = byPtr(_ % 2 == 0, false)
+    ptr.select(col("r"), col("c"),
+      when(flows, col("r") + byPtr(dY, 0)).otherwise(col("r")).as("tr"),
+      when(flows, col("c") + byPtr(dX, 0)).otherwise(col("c")).as("tc"),
+      when(flows && !diag, 1L).otherwise(0L).as("ns"),
+      when(flows && diag, 1L).otherwise(0L).as("nd"))
   }
 
   /** Dinf facet table (Tarboton 1997; reference FlowPointerDinf.java):
@@ -875,15 +885,16 @@ object Terrain {
 
   /**
    * Size switch for the iterative fixpoints: below this many rows the
-   * DAG folds ([[DagFold]]) and pointer chases run in ONE task over
-   * primitive arrays — the DAG folds in Kahn order, each cell computed
-   * once from final inputs, which is bit-equal to the distributed
-   * rounds run until stationary — without paying ~0.5 s of
-   * job-scheduling overhead per round for a relation that fits in one
-   * executor's memory. Above it, the distributed form runs (the
-   * 100 TB path). This is the same runtime-statistics-driven strategy
-   * choice AQE makes for joins, applied to iteration. Tests lower it
-   * to force the distributed path.
+   * DAG folds and pointer chases ([[DagFold]]) and the connected-
+   * component labelling ([[GraphCC.label]], counted in edges) run in
+   * ONE task over primitive arrays — the DAG folds and chases in Kahn
+   * order, each cell computed once from final inputs, which is
+   * bit-equal to the distributed rounds run until stationary — without
+   * paying ~0.5 s of job-scheduling overhead per round for a relation
+   * that fits in one executor's memory. Above it, the distributed form
+   * runs (the 100 TB path). This is the same runtime-statistics-driven
+   * strategy choice AQE makes for joins, applied to iteration. Tests
+   * lower it to force the distributed path.
    */
   private[graft] var localFixpointMaxRows: Long = 4000000L
 
@@ -1896,23 +1907,21 @@ object Terrain {
   def upstreamChannelStats(grid: DataFrame,
                            threshold: Long): DataFrame = {
     val (stream, sedges0, _) = streamGraph(grid, threshold)
-    val dNano = when(
-      abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
-      lit(DiagNano)).otherwise(lit(1000000000L))
     val edges = sedges0
-      .select(col("r"), col("c"), col("tr"), col("tc"), dNano.as("d"))
+      .select(col("r"), col("c"), col("tr"), col("tc"), stepNano.as("d"))
       .localCheckpoint(true)
     val base = stream.localCheckpoint(true)
     val n = base.count()
     if (n <= localFixpointMaxRows)
       return DagFold.successorFoldLocal("upstreamChannelStats",
           base.withColumn("x", lit(0L)), edges,
-          Seq("total_upstream_nano", "head_dist_nano")) { g =>
+          Seq("total_upstream_nano", "head_dist_nano"), Seq("d")) { g =>
         val tot = new Array[Long](g.n)
         val hd = new Array[Long](g.n)
+        val len = g.d.head
         g.forEachEdge { (i, t) =>
-          tot(t) += tot(i) + g.d(i)
-          hd(t) = math.max(hd(t), hd(i) + g.d(i))
+          tot(t) += tot(i) + len(i)
+          hd(t) = math.max(hd(t), hd(i) + len(i))
         }
         Seq(tot, hd)
       }
@@ -2071,7 +2080,7 @@ object Terrain {
         coalesce(col("pr"), col("r")).as("tr"),
         coalesce(col("pc"), col("c")).as("tc"))
       .localCheckpoint(true)
-    resolvePointers(nxt).select(col("r"), col("c"),
+    DagFold.resolvePointers("streamLinkId", nxt).select(col("r"), col("c"),
       (col("tr") * width + col("tc")).as("link_id"))
   }
 
@@ -2378,22 +2387,11 @@ object Terrain {
     val (stream, sedges, indeg) = streamGraph(grid, threshold)
     val links = linkFromGraph(stream, sedges, indeg, width)
       .localCheckpoint(true)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
     val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
+    val next = d8Next(d8Pointer(grid).join(isStream, Seq("r", "c"), "left"),
+        col("__s").isNotNull)
       .localCheckpoint(true)
-    resolvePointers(next)
+    DagFold.resolvePointers("subbasins", next)
       .join(links.select(col("r").as("tr"), col("c").as("tc"),
         col("link_id")), Seq("tr", "tc"))
       .select(col("r"), col("c"), col("link_id").as("basin"))
@@ -2408,25 +2406,14 @@ object Terrain {
    */
   def elevAboveStream(grid: DataFrame, threshold: Long): DataFrame = {
     val (stream, _, _) = streamGraph(grid, threshold)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
     val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
+    val next = d8Next(d8Pointer(grid).join(isStream, Seq("r", "c"), "left"),
+        col("__s").isNotNull)
       .localCheckpoint(true)
     val sv = stream.join(grid.select(col("r"), col("c"), col("v")),
         Seq("r", "c"))
       .select(col("r").as("tr"), col("c").as("tc"), col("v").as("sv"))
-    resolvePointers(next)
+    DagFold.resolvePointers("elevAboveStream", next)
       .join(sv, Seq("tr", "tc"))
       .join(grid.select(col("r"), col("c"), col("v")), Seq("r", "c"))
       .select(col("r"), col("c"),
@@ -2463,24 +2450,13 @@ object Terrain {
         Seq("r", "c"), "left")
       .where(col("__in").isNull)
       .select(col("r"), col("c"), col("v"))
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
     val isStream = stream.withColumn("__s", lit(true))
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
+    val next = d8Next(d8Pointer(grid).join(isStream, Seq("r", "c"), "left"),
+        col("__s").isNotNull)
       .localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("head_id").orderBy("v", "r", "c")
-    resolvePointers(next)
+    DagFold.resolvePointers("saddlePoints", next)
       .join(ridge, Seq("r", "c"))
       .join(heads, Seq("tr", "tc"))
       .withColumn("__rn", row_number().over(w))
@@ -2695,21 +2671,11 @@ object Terrain {
     val seeds = bank
       .unionByName(sid.select(col("r"), col("c"), col("sid").as("lbl")))
       .localCheckpoint(true)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
     val isSeed = seeds.select(col("r"), col("c"), lit(true).as("__s"))
-    val next = ptr.join(isSeed, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("r"))
-          .otherwise(col("r") + dyExpr).as("tr"),
-        when(col("__s").isNotNull || col("ptr") === 0, col("c"))
-          .otherwise(col("c") + dxExpr).as("tc"))
+    val next = d8Next(ptr.join(isSeed, Seq("r", "c"), "left"),
+        col("__s").isNotNull)
       .localCheckpoint(true)
-    val resolved = resolvePointers(next)
+    val resolved = DagFold.resolvePointers("hillslopes", next)
       .join(seeds.select(col("r").as("tr"), col("c").as("tc"),
         col("lbl")), Seq("tr", "tc"))
       .select(col("r"), col("c"), col("lbl"))
@@ -2729,23 +2695,9 @@ object Terrain {
    * doubling is bit-exact against the sequential-walk oracle.
    */
   def flowpathLength(grid: DataFrame): DataFrame = {
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val diag = (0 until 8).foldLeft(lit(false)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(i % 2 == 0)).otherwise(acc)
-    }
-    val next = ptr.select(col("r"), col("c"),
-        when(col("ptr") > 0, col("r") + dyExpr).otherwise(col("r")).as("tr"),
-        when(col("ptr") > 0, col("c") + dxExpr).otherwise(col("c")).as("tc"),
-        when(col("ptr") > 0 && !diag, 1L).otherwise(0L).as("ns"),
-        when(col("ptr") > 0 && diag, 1L).otherwise(0L).as("nd"))
-      .localCheckpoint(true)
-    resolvePointersSteps(next).select(col("r"), col("c"),
+    val next = d8Next(d8Pointer(grid)).localCheckpoint(true)
+    DagFold.resolvePointers("flowpathLength", next, Seq("ns", "nd"))
+      .select(col("r"), col("c"),
       round(col("ns") + col("nd") * math.sqrt(2.0), 6).as("fp_len"))
   }
 
@@ -2949,26 +2901,12 @@ object Terrain {
   def downslopeDistanceToStream(grid: DataFrame,
                                 threshold: Long): DataFrame = {
     val (stream, _, _) = streamGraph(grid, threshold)
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    val diag = (0 until 8).foldLeft(lit(false)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(i % 2 == 0)).otherwise(acc)
-    }
     val isStream = stream.withColumn("__s", lit(true))
-    val stop = col("__s").isNotNull || col("ptr") === 0
-    val next = ptr.join(isStream, Seq("r", "c"), "left")
-      .select(col("r"), col("c"),
-        when(stop, col("r")).otherwise(col("r") + dyExpr).as("tr"),
-        when(stop, col("c")).otherwise(col("c") + dxExpr).as("tc"),
-        when(!stop && !diag, 1L).otherwise(0L).as("ns"),
-        when(!stop && diag, 1L).otherwise(0L).as("nd"))
+    val next = d8Next(d8Pointer(grid).join(isStream, Seq("r", "c"), "left"),
+        col("__s").isNotNull)
       .localCheckpoint(true)
-    resolvePointersSteps(next)
+    DagFold.resolvePointers("downslopeDistanceToStream", next,
+        Seq("ns", "nd"))
       .join(stream.select(col("r").as("tr"), col("c").as("tc")),
         Seq("tr", "tc"))
       .select(col("r"), col("c"),
@@ -2988,26 +2926,22 @@ object Terrain {
    * above it.
    */
   def upslopeFlowpathStats(grid: DataFrame): DataFrame = {
-    val dNano = when(
-      abs(col("tr") - col("r")) + abs(col("tc") - col("c")) === 2,
-      lit(DiagNano)).otherwise(lit(1000000000L))
-    val edges = d8Edges(grid)
-      .select(col("r"), col("c"), col("tr"), col("tc"),
-        dNano.as("d"))
+    val edges = d8Edges(grid).withColumn("d", stepNano)
       .localCheckpoint(true)
     val base = grid.select(col("r"), col("c")).localCheckpoint(true)
     val n = base.count()
     if (n <= localFixpointMaxRows)
       return DagFold.successorFoldLocal("upslopeFlowpathStats",
           base.withColumn("x", lit(0L)), edges,
-          Seq("max_len_nano", "n_paths", "sum_len_nano")) { g =>
+          Seq("max_len_nano", "n_paths", "sum_len_nano"), Seq("d")) { g =>
         val mx = new Array[Long](g.n)
         val cnt = Array.fill(g.n)(1L)
         val sm = new Array[Long](g.n)
+        val len = g.d.head
         g.forEachEdge { (i, t) =>
-          mx(t) = math.max(mx(t), mx(i) + g.d(i))
+          mx(t) = math.max(mx(t), mx(i) + len(i))
           cnt(t) += cnt(i)
-          sm(t) += sm(i) + cnt(i) * g.d(i)
+          sm(t) += sm(i) + cnt(i) * len(i)
         }
         Seq(mx, cnt, sm)
       }
@@ -3045,19 +2979,18 @@ object Terrain {
    * diameter of spill paths, not their cell length.
    */
   def fillDepressions(grid: DataFrame, nRows: Long, nCols: Long,
-                      tileSize: Int = 16,
                       memoize: Boolean = true): DataFrame =
     if (memoize)
       graft.core.Memo.cached(
-        graft.core.Memo.key(grid, s"fillDepressions:$nRows:$nCols:$tileSize"),
-        grid.sparkSession) { fillDepressionsImpl(grid, nRows, nCols, tileSize) }
-    else fillDepressionsImpl(grid, nRows, nCols, tileSize)
+        graft.core.Memo.key(grid, s"fillDepressions:$nRows:$nCols"),
+        grid.sparkSession) { fillDepressionsImpl(grid, nRows, nCols) }
+    else fillDepressionsImpl(grid, nRows, nCols)
 
-  private def fillDepressionsImpl(grid: DataFrame, nRows: Long, nCols: Long,
-                                  tileSize: Int): DataFrame = {
+  private def fillDepressionsImpl(grid: DataFrame, nRows: Long,
+                                  nCols: Long): DataFrame = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val T = tileSize.toLong
+    val T = TileSize
     def tileOf(r: Long, c: Long): (Long, Long) =
       (Math.floorDiv(r, T), Math.floorDiv(c, T))
     val cells = grid.select(col("r"), col("c"), col("v"))
@@ -3102,11 +3035,10 @@ object Terrain {
    * cost: (r, c, v) positive cost surface; sources: (r, c).
    */
   def costAccumulation(cost: DataFrame, sources: DataFrame,
-                       nRows: Long, nCols: Long,
-                       tileSize: Int = 16): DataFrame = {
+                       nRows: Long, nCols: Long): DataFrame = {
     val spark = cost.sparkSession
     import spark.implicits._
-    val T = tileSize.toLong
+    val T = TileSize
     def tileOf(r: Long, c: Long): (Long, Long) =
       (Math.floorDiv(r, T), Math.floorDiv(c, T))
     val cells = cost
@@ -3195,7 +3127,7 @@ object Terrain {
     if (n <= localFixpointMaxRows)
       return DagFold.successorFoldLocal("costPathway",
           base.withColumnRenamed("load", "x"),
-          bl.withColumn("d", lit(0L)), Seq("n_paths")) { g =>
+          bl, Seq("n_paths")) { g =>
         val cnt = g.x.clone()
         g.forEachEdge((i, t) => cnt(t) += cnt(i))
         Seq(cnt)
@@ -3238,140 +3170,6 @@ object Terrain {
     grid.join(nn, Seq("r", "c"))
       .select(col("r"), col("c"),
         round(col("v") - w * w * lit(decrement), 6).as("burned"))
-  }
-
-  /**
-   * Watershed (HydroTools/Watershed.java:386-401 trace semantics):
-   * label every cell with the sink (terminal cell, ptr = 0) its D8
-   * flowpath reaches. Distributed by POINTER DOUBLING: each round
-   * replaces every cell's successor with its successor's successor,
-   * so convergence takes O(log(longest path)) rounds instead of
-   * O(path) — the Spark-native answer to the reference's per-cell
-   * downstream trace loop.
-   * Output: (r, c, sink_id) with sink_id = sink.r * width + sink.c.
-   */
-  /**
-   * Pointer-chase fixpoint shared by watershed / subbasins / stream
-   * links / flowpath length: input (r, c, tr, tc) with absorbing
-   * cells self-pointing; output has every (tr, tc) resolved to its
-   * terminal cell. Size-adaptive ([[localFixpointMaxRows]]): small
-   * relations chase in ONE task with memoised path walking (integer-
-   * only, so bit-identical to the doubling); large ones run
-   * distributed pointer doubling with a per-round convergence count.
-   * Input must already be checkpointed (both paths re-scan it).
-   */
-  private[graft] def resolvePointers(next0: DataFrame): DataFrame = {
-    if (next0.count() <= localFixpointMaxRows) {
-      val spark = next0.sparkSession
-      import spark.implicits._
-      return next0.select(col("r"), col("c"), col("tr"), col("tc"))
-        .as[(Long, Long, Long, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val rows = it.toArray
-          val nxt = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long)]
-          rows.foreach(t => nxt((t._1, t._2)) = (t._3, t._4))
-          val root = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long)]
-          def resolve(k0: (Long, Long)): (Long, Long) = {
-            var path = List.empty[(Long, Long)]
-            var k = k0
-            while (!root.contains(k) && nxt.getOrElse(k, k) != k) {
-              path ::= k
-              k = nxt(k)
-            }
-            val r = root.getOrElse(k, k)
-            path.foreach(p => root(p) = r)
-            r
-          }
-          rows.iterator.map { t =>
-            val r = resolve((t._1, t._2))
-            (t._1, t._2, r._1, r._2)
-          }
-        }.toDF("r", "c", "tr", "tc")
-    }
-    var next = next0
-    var converged = false
-    while (!converged) {
-      val hop = next.select(col("r").as("hr"), col("c").as("hc"),
-        col("tr").as("ttr"), col("tc").as("ttc"))
-      val doubled = next.join(hop,
-          col("tr") === col("hr") && col("tc") === col("hc"), "inner")
-        .select(col("r"), col("c"), col("ttr").as("tr"),
-          col("ttc").as("tc"))
-        .localCheckpoint(true)
-      val moved = doubled.join(next.select(col("r"), col("c"),
-          col("tr").as("otr"), col("tc").as("otc")), Seq("r", "c"))
-        .where(col("tr") =!= col("otr") || col("tc") =!= col("otc"))
-        .count()
-      next = doubled
-      converged = moved == 0
-    }
-    next
-  }
-
-  /** [[resolvePointers]] variant that also composes the straight /
-    * diagonal step counts (integers — exact under any composition
-    * order). Input/output: (r, c, tr, tc, ns, nd). */
-  private[graft] def resolvePointersSteps(next0: DataFrame): DataFrame = {
-    if (next0.count() <= localFixpointMaxRows) {
-      val spark = next0.sparkSession
-      import spark.implicits._
-      return next0
-        .select(col("r"), col("c"), col("tr"), col("tc"), col("ns"),
-          col("nd"))
-        .as[(Long, Long, Long, Long, Long, Long)]
-        .coalesce(1).mapPartitions { it =>
-          val rows = it.toArray
-          val nxt = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long, Long, Long)]
-          rows.foreach(t => nxt((t._1, t._2)) = (t._3, t._4, t._5, t._6))
-          // memo: cell -> (root, total ns, total nd)
-          val memo = new scala.collection.mutable.HashMap[
-            (Long, Long), (Long, Long, Long, Long)]
-          def resolve(k0: (Long, Long)): (Long, Long, Long, Long) = {
-            var path = List.empty[(Long, Long)]
-            var k = k0
-            while (!memo.contains(k) && {
-                val e = nxt(k); (e._1, e._2) != k
-              }) {
-              path ::= k
-              k = { val e = nxt(k); (e._1, e._2) }
-            }
-            var cur = memo.getOrElse(k, (k._1, k._2, 0L, 0L))
-            path.foreach { p =>
-              val e = nxt(p)
-              cur = (cur._1, cur._2, cur._3 + e._3, cur._4 + e._4)
-              memo(p) = cur
-            }
-            memo.getOrElse(k0, cur)
-          }
-          rows.iterator.map { t =>
-            val r = resolve((t._1, t._2))
-            (t._1, t._2, r._1, r._2, r._3, r._4)
-          }
-        }.toDF("r", "c", "tr", "tc", "ns", "nd")
-    }
-    var next = next0
-    var converged = false
-    while (!converged) {
-      val hop = next.select(col("r").as("hr"), col("c").as("hc"),
-        col("tr").as("ttr"), col("tc").as("ttc"),
-        col("ns").as("hns"), col("nd").as("hnd"))
-      val doubled = next.join(hop,
-          col("tr") === col("hr") && col("tc") === col("hc"), "inner")
-        .select(col("r"), col("c"), col("ttr").as("tr"),
-          col("ttc").as("tc"), (col("ns") + col("hns")).as("ns"),
-          (col("nd") + col("hnd")).as("nd"))
-        .localCheckpoint(true)
-      val moved = doubled.join(next.select(col("r"), col("c"),
-          col("ns").as("ons"), col("nd").as("ond")), Seq("r", "c"))
-        .where(col("ns") =!= col("ons") || col("nd") =!= col("ond"))
-        .count()
-      next = doubled
-      converged = moved == 0
-    }
-    next
   }
 
   /**
@@ -3835,11 +3633,7 @@ object Terrain {
   /**
    * Full flowpath closure: every (sr, sc, r, c, dn) with (r, c) on
    * the D8 path from (sr, sc) and dn the exact nano path distance
-   * (identity rows dn = 0 included). Transitive-closure doubling —
-   * O(log pathLen) rounds, each a self-join; closure size is
-   * O(cells x path length), the same bound as the walk CTEs the
-   * oracle uses. Paths are unique in a functional graph, so each
-   * (start, cell) pair carries one distance and `distinct` is exact.
+   * (identity rows dn = 0 included), by [[DagFold.closure]] doubling.
    */
   private def flowpathClosure(grid: DataFrame): DataFrame =
     graft.core.Memo.cached(
@@ -3854,27 +3648,7 @@ object Terrain {
   private def flowpathClosureImpl(ptr: DataFrame): DataFrame = {
     val e = d8EdgesFromPtr(ptr).withColumn("d", stepNano)
       .localCheckpoint(true)
-    var r = ptr.select(col("r").as("sr"), col("c").as("sc"),
-        col("r"), col("c"), lit(0L).as("dn"))
-      .unionByName(e.select(col("r").as("sr"), col("c").as("sc"),
-        col("tr").as("r"), col("tc").as("c"), col("d").as("dn")))
-      .localCheckpoint(true)
-    var n = r.count()
-    var converged = false
-    while (!converged) {
-      val hop = r.select(col("sr").as("hr"), col("sc").as("hc"),
-        col("r").as("r2"), col("c").as("c2"), col("dn").as("d2"))
-      val doubled = r
-        .join(hop, col("r") === col("hr") && col("c") === col("hc"))
-        .select(col("sr"), col("sc"), col("r2").as("r"),
-          col("c2").as("c"), (col("dn") + col("d2")).as("dn"))
-        .unionByName(r).distinct().localCheckpoint(true)
-      val n2 = doubled.count()
-      converged = n2 == n
-      n = n2
-      r = doubled
-    }
-    r
+    DagFold.closure("flowpathClosure", ptr, e, dist = Some("d"))
   }
 
   /**
@@ -4017,27 +3791,9 @@ object Terrain {
       .where(col("rn") === 1)
       .select(col("r"), col("c"), col("nr").as("tr"), col("nc").as("tc"))
       .localCheckpoint(true)
-    // upstream closure via the same doubling as flowpathClosure
-    var rch = creek.select(col("r").as("sr"), col("c").as("sc"),
-        col("r"), col("c"))
-      .unionByName(edges.select(col("r").as("sr"), col("c").as("sc"),
-        col("tr").as("r"), col("tc").as("c")))
-      .distinct().localCheckpoint(true)
-    var n = rch.count()
-    var converged = false
-    while (!converged) {
-      val hop = rch.select(col("sr").as("hr"), col("sc").as("hc"),
-        col("r").as("r2"), col("c").as("c2"))
-      val doubled = rch
-        .join(hop, col("r") === col("hr") && col("c") === col("hc"))
-        .select(col("sr"), col("sc"), col("r2").as("r"), col("c2").as("c"))
-        .unionByName(rch).distinct().localCheckpoint(true)
-      val n2 = doubled.count()
-      converged = n2 == n
-      n = n2
-      rch = doubled
-    }
-    rch.join(creek.select(col("r").as("sr"), col("c").as("sc"),
+    // (sr, sc) reaches (r, c): grouped by (r, c), its upstream set
+    DagFold.closure("medianUpstreamArea", creek, edges)
+      .join(creek.select(col("r").as("sr"), col("c").as("sc"),
         col("area")), Seq("sr", "sc"))
       .groupBy("r", "c")
       .agg(percentile(col("area").cast("double"), lit(0.5)).as("med_area"))
@@ -4310,22 +4066,20 @@ object Terrain {
         (coalesce(col("k"), lit(0L)).cast("double") / iters).as("pdep"))
   }
 
+  /**
+   * Watershed (HydroTools/Watershed.java:386-401 trace semantics):
+   * label every cell with the sink (terminal cell, ptr = 0) its D8
+   * flowpath reaches — the reference's per-cell downstream trace loop,
+   * run as one pointer resolution ([[DagFold.resolvePointers]]): in one
+   * task below [[localFixpointMaxRows]], each cell reading its
+   * successor's final sink in reverse topological order; above it,
+   * distributed pointer doubling in O(log longest path) rounds. A
+   * pointer cycle (e.g. around NaN cells) fails both arms.
+   * Output: (r, c, sink_id) with sink_id = sink.r * width + sink.c.
+   */
   def watershed(grid: DataFrame, width: Long): DataFrame = {
-    val ptr = d8Pointer(grid)
-    val dyExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dY(i))).otherwise(acc)
-    }
-    val dxExpr = (0 until 8).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ptr") === (1 << i), lit(dX(i))).otherwise(acc)
-    }
-    // next(cell): downstream cell for flowing cells, self for sinks
-    val next = ptr.select(col("r"), col("c"),
-        when(col("ptr") > 0, col("r") + dyExpr).otherwise(col("r"))
-          .as("tr"),
-        when(col("ptr") > 0, col("c") + dxExpr).otherwise(col("c"))
-          .as("tc"))
-      .localCheckpoint(true)
-    resolvePointers(next).select(col("r"), col("c"),
+    val next = d8Next(d8Pointer(grid)).localCheckpoint(true)
+    DagFold.resolvePointers("watershed", next).select(col("r"), col("c"),
       (col("tr") * width + col("tc")).as("sink_id"))
   }
 }

@@ -76,8 +76,9 @@ object GeoTiffIO {
   }
 
   /** Read a strip-organized float32 GeoTIFF into (r, c, v); cells
-    * equal to `noData` are dropped. Returns the georeferencing
-    * (originX, originY, scaleX, scaleY) via [[readGeoref]]. */
+    * equal to `noData` (any NaN when `noData` is NaN) are dropped.
+    * Returns the georeferencing (originX, originY, scaleX, scaleY)
+    * via [[readGeoref]]. */
   def readGeoTiff(spark: SparkSession, path: String,
                   noData: Double = Double.NaN): DataFrame = {
     import spark.implicits._
@@ -107,7 +108,7 @@ object GeoTiffIO {
           r <- (0 until nRows).iterator
           c <- (0 until width).iterator
           v = buf.getFloat(off.toInt + (r * width + c) * 4).toDouble
-          if noData.isNaN || v != noData
+          if (if (noData.isNaN) !v.isNaN else v != noData)
         } yield ((r0 + r).toLong, c.toLong, v)
       }
     }.toDF("r", "c", "v")

@@ -12,14 +12,14 @@ class CostSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("tiled cost accumulation equals global Dijkstra") {
-    val nR = 23L; val nC = 31L
+    // 40 x 60 spans 3 x 4 tiles of 16 cells, so halos cross tiles
+    val nR = 40L; val nC = 60L
     val cells = (for (r <- 0L until nR; c <- 0L until nC)
       yield (r, c, ((r * 13 + c * 7) % 17).toDouble / 8.0 + 1.0))
     val srcs = Seq((3L, 4L), (20L, 28L), (11L, 15L))
     val cost = cells.toDF("r", "c", "v")
     val sources = srcs.toDF("r", "c")
-    val got = Terrain.costAccumulation(cost, sources, nR, nC,
-        tileSize = 8)
+    val got = Terrain.costAccumulation(cost, sources, nR, nC)
       .collect()
       .map(x => (x.getLong(0), x.getLong(1)) ->
         (x.getDouble(2), x.getLong(3))).toMap

@@ -9,7 +9,7 @@ import org.scalatest.Assertions
   * a fresh input in each call (e.g. `grid.localCheckpoint()`), or the
   * second arm returns the first arm's cached frame. */
 object FixpointArms extends Assertions {
-  def both[V](run: () => Map[(Long, Long), V]): Map[(Long, Long), V] = {
+  def both[K, V](run: () => Map[K, V]): Map[K, V] = {
     val saved = Terrain.localFixpointMaxRows
     try {
       Terrain.localFixpointMaxRows = Long.MaxValue
@@ -18,7 +18,7 @@ object FixpointArms extends Assertions {
       val dist = run()
       assert(local.keySet == dist.keySet)
       local.foreach { case (k, v) =>
-        assert(v == dist(k), s"cell $k: local=$v dist=${dist(k)}")
+        assert(v == dist(k), s"key $k: local=$v dist=${dist(k)}")
       }
       local
     } finally Terrain.localFixpointMaxRows = saved

@@ -106,16 +106,8 @@ class FixpointSpec extends AnyFunSuite {
       Seq((1000L, 1001L), (1001L, 1002L), (1002L, 1000L)) ++
       (0L until 10L).map(i => (2000L, 2001L + i)) ++
       Seq((5000L, 5000L), (6000L, 6000L))).toDF("a", "b")
-    def run(): Map[Long, Long] = GraphCC.label(edges).collect()
-      .map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val saved = GraphCC.localMaxEdges
-    try {
-      GraphCC.localMaxEdges = Long.MaxValue
-      val local = run()
-      GraphCC.localMaxEdges = 0L
-      val dist = run()
-      assert(local == dist)
-    } finally GraphCC.localMaxEdges = saved
+    both(() => GraphCC.label(edges).collect()
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap)
   }
 
   test("mass flux: local Jacobi == distributed rounds") {

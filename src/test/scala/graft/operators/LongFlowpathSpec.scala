@@ -8,7 +8,8 @@ import FixpointArms.both
 
 /** The DAG folds are exact however long the flowpaths: on a strip whose
   * longest flowpath is 69 steps, both arms equal a driver-side Jacobi
-  * run until stationary and conserve mass. A cycle fails both arms. */
+  * run until stationary and conserve mass. A cycle fails both arms of
+  * the folds and of the pointer chase. */
 class LongFlowpathSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -104,14 +105,15 @@ class LongFlowpathSpec extends AnyFunSuite {
     assert(paths((0L, 0L)) == nCells)
   }
 
-  /** Asserts that `run` fails on both arms, naming the cycle. */
-  private def failsOnBothArms(run: () => Any): Unit = {
+  /** Asserts that `run` fails on both arms, naming `op` and the cycle. */
+  private def failsOnBothArms(op: String)(run: () => Any): Unit = {
     val saved = Terrain.localFixpointMaxRows
     try {
       for (limit <- Seq(Long.MaxValue, 0L)) {
         Terrain.localFixpointMaxRows = limit
         val e = intercept[Exception](run())
-        assert(e.getMessage.contains("cycle"), e.getMessage)
+        assert(e.getMessage.contains(s"$op: ") &&
+          e.getMessage.contains("cycle"), e.getMessage)
       }
     } finally Terrain.localFixpointMaxRows = saved
   }
@@ -120,7 +122,8 @@ class LongFlowpathSpec extends AnyFunSuite {
     val cells = Seq((0L, 0L), (0L, 1L)).toDF("r", "c")
     val edges = Seq((0L, 0L, 0L, 1L, 1.0, 5), (0L, 1L, 0L, 0L, 1.0, 1))
       .toDF("r", "c", "tr", "tc", "w", "j")
-    failsOnBothArms(() => Terrain.weightedAccum(edges, cells).collect())
+    failsOnBothArms("weightedAccum")(() =>
+      Terrain.weightedAccum(edges, cells).collect())
   }
 
   test("a 2-cell cycle fails the successor fold on both arms") {
@@ -130,7 +133,25 @@ class LongFlowpathSpec extends AnyFunSuite {
       .toDF("r", "c", "v")
     val sources = Seq((1L, 2L)).toDF("r", "c")
     val dests = Seq((0L, 0L)).toDF("r", "c")
-    failsOnBothArms(() =>
+    failsOnBothArms("costPathway")(() =>
       Terrain.costPathway(cost, sources, dests, 2, 3).collect())
+  }
+
+  // 3 x 3 DEM with a NaN centre: a NaN slope compares greatest, so
+  // every neighbour points at the centre and the centre at its first
+  // neighbour (0, 2), a 2-cycle in the D8 pointer
+  private lazy val nanCentre =
+    (for (r <- 0L until 3L; c <- 0L until 3L)
+      yield (r, c, if (r == 1 && c == 1) Double.NaN else (r + c).toDouble))
+      .toDF("r", "c", "v")
+
+  test("a D8 pointer cycle fails the watershed chase on both arms") {
+    failsOnBothArms("watershed")(() =>
+      Terrain.watershed(nanCentre, 3).collect())
+  }
+
+  test("a D8 pointer cycle fails the flowpath-length chase on both arms") {
+    failsOnBothArms("flowpathLength")(() =>
+      Terrain.flowpathLength(nanCentre).collect())
   }
 }

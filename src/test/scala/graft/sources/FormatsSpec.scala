@@ -190,6 +190,15 @@ class FormatsSpec extends AnyFunSuite {
     assert(ox === -180.0 && oy === 85.0 && sx === 0.5 && sy === 0.5)
   }
 
+  test("GeoTIFF round-trip drops NaN NoData cells by default") {
+    val dir = Files.createTempDirectory("tif").toString
+    val p = s"$dir/g.tif"
+    GeoTiffIO.writeGeoTiff(grid, rows, cols, originX = 0.0,
+      originY = 0.0, scaleX = 1.0, scaleY = 1.0, noData = Double.NaN,
+      path = p)
+    assert(collect(GeoTiffIO.readGeoTiff(spark, p)) === want)
+  }
+
   test("GML export emits one featureMember per feature") {
     val dir = Files.createTempDirectory("gml").toString
     val feats = Seq(
